@@ -20,11 +20,8 @@ All batch functions take numpy arrays and never loop per row in Python
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
-GOLDEN = 0.6180339887498949  # frac(phi)
 
 # ------------------------------------------------------------------ hashing
 def splitmix64(x) -> np.ndarray:
@@ -36,22 +33,45 @@ def splitmix64(x) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
-def u01(h: np.ndarray) -> np.ndarray:
-    """uint64 hash -> uniform [0,1) double with 53-bit mantissa."""
-    return (np.asarray(h, dtype=np.uint64) >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-
-
-def h32(x) -> np.ndarray:
-    """Knuth multiplicative 32-bit mix — also expressible in plain SQL
-    ((x * 2654435761) % 4294967296) for DuckDB-oracle-checked queries."""
-    return (np.asarray(x, dtype=np.int64) * 2654435761) % 4294967296
-
-
 # ---------------------------------------------------------------------- WKT
-def format_point_wkt(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-    return np.array(
-        [f"POINT({x:.7f} {y:.7f})" for x, y in zip(lon, lat)], dtype=object
-    )
+def _parse_wkt_one(s) -> tuple[np.ndarray, np.ndarray]:
+    """One POINT/POLYGON WKT string -> (xs, ys). None and EMPTY -> empty
+    arrays (a geometry that never matches); POLYGON -> exterior ring,
+    closing vertex dropped. Interior rings are refused rather than
+    dropped: an exterior-only test would report zones inside the hole."""
+    if s is None:
+        return np.empty(0), np.empty(0)
+    s = s.strip()
+    if s.startswith(("POINT", "POLYGON")) and s.endswith("EMPTY"):
+        return np.empty(0), np.empty(0)
+    if s.startswith("POINT"):
+        body = s[s.index("(") + 1 : s.rindex(")")]
+        x, y = body.split()
+        return np.array([float(x)]), np.array([float(y)])
+    if s.startswith("POLYGON"):
+        body = s[s.index("((") + 2 : s.index("))")]
+        if ")" in body:
+            raise ValueError(f"POLYGON with interior rings is unsupported: {s[:40]}")
+        flat = np.array(body.replace(",", " ").split(), dtype=np.float64)
+        xs = flat[0::2].copy()
+        ys = flat[1::2].copy()
+        if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
+            xs, ys = xs[:-1], ys[:-1]
+        return xs, ys
+    raise ValueError(f"unsupported WKT: {s[:40]}")
+
+
+def parse_wkt_objs(objs) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """Parse a (small) batch of WKT strings known to be mostly
+    non-points — plain Python loop over the raw objects, no pandas
+    indexing overhead."""
+    xs_out: list[np.ndarray] = []
+    ys_out: list[np.ndarray] = []
+    for s in objs:
+        xs, ys = _parse_wkt_one(s)
+        xs_out.append(xs)
+        ys_out.append(ys)
+    return xs_out, ys_out
 
 
 def parse_wkt_batch(wkt: "np.ndarray") -> tuple[list[np.ndarray], list[np.ndarray]]:
@@ -77,62 +97,22 @@ def parse_wkt_batch(wkt: "np.ndarray") -> tuple[list[np.ndarray], list[np.ndarra
     for i in np.where(is_pt)[0]:
         xs_out[i] = np.array([px[i]])
         ys_out[i] = np.array([py_[i]])
-    for i in np.where(~is_pt)[0]:
-        s = ser.iloc[i]
-        if s is None:
-            xs_out[i] = np.empty(0)
-            ys_out[i] = np.empty(0)
-            continue
-        s = s.strip()
-        if s.startswith("POINT"):
-            body = s[s.index("(") + 1 : s.rindex(")")]
-            x, y = body.split()
-            xs_out[i] = np.array([float(x)])
-            ys_out[i] = np.array([float(y)])
-        elif s.startswith("POLYGON"):
-            body = s[s.index("((") + 2 : s.index("))")]
-            pts = [p.split() for p in body.split(",")]
-            xs = np.array([float(p[0]) for p in pts])
-            ys = np.array([float(p[1]) for p in pts])
-            if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-                xs, ys = xs[:-1], ys[:-1]
-            xs_out[i] = xs
-            ys_out[i] = ys
-        else:
-            raise ValueError(f"unsupported WKT: {s[:40]}")
+    rest = np.where(~is_pt)[0]
+    gxs, gys = parse_wkt_objs(ser.to_numpy()[rest])
+    for k, i in enumerate(rest):
+        xs_out[i] = gxs[k]
+        ys_out[i] = gys[k]
     return xs_out, ys_out
 
 
-def parse_wkt_objs(objs) -> tuple[list[np.ndarray], list[np.ndarray]]:
-    """Parse a (small) batch of WKT strings known to be mostly
-    non-points — plain Python loop over the raw objects, no pandas
-    indexing overhead (parse_wkt_batch's per-row .iloc costs more than
-    the parse itself on minority-row paths)."""
-    xs_out: list[np.ndarray] = []
-    ys_out: list[np.ndarray] = []
-    for s in objs:
-        if s is None:
-            xs_out.append(np.empty(0))
-            ys_out.append(np.empty(0))
-            continue
-        s = s.strip()
-        if s.startswith("POINT"):
-            body = s[s.index("(") + 1 : s.rindex(")")]
-            x, y = body.split()
-            xs_out.append(np.array([float(x)]))
-            ys_out.append(np.array([float(y)]))
-        elif s.startswith("POLYGON"):
-            body = s[s.index("((") + 2 : s.index("))")]
-            flat = np.array(body.replace(",", " ").split(), dtype=np.float64)
-            xs = flat[0::2].copy()
-            ys = flat[1::2].copy()
-            if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-                xs, ys = xs[:-1], ys[:-1]
-            xs_out.append(xs)
-            ys_out.append(ys)
-        else:
-            raise ValueError(f"unsupported WKT: {s[:40]}")
-    return xs_out, ys_out
+def rep_point(xs: np.ndarray, ys: np.ndarray) -> tuple[float, float]:
+    """Representative point of a vertex list: the vertex mean, folded by
+    np.add.reduce so the sum order matches the oracle's (SURVEY.md
+    §7.4); the point itself for one vertex, NaN for an empty geometry."""
+    n = len(xs)
+    if n == 0:
+        return np.nan, np.nan
+    return np.add.reduce(xs) / n, np.add.reduce(ys) / n
 
 
 # ------------------------------------------------------- point in polygon

@@ -44,31 +44,69 @@ def geom_wkt_col():
 _POINT_RE = r"^POINT\(([-0-9.eE+]+) ([-0-9.eE+]+)\)$"
 
 
-def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: np.ndarray) -> dict:
-    """Rows whose lon is NaN carry a non-point (or missing) WKT in
-    `raw`: parse them Python-side (bounded minority), fill their rep
-    point (vertex mean via sequential np.add.reduce — matches the
-    oracle's fold order, SURVEY.md §7.4) in place, and return the
+def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: pd.Series) -> dict:
+    """Input adapter for the raw-docs path. Rows whose lon is NaN carry
+    a non-point (or missing) WKT in `raw`: parse them Python-side
+    (bounded minority), fill their rep point in place, and return the
     sparse {row: (xs, ys)} dict. Point rows never touch Python: the JVM
     already extracted their coordinates with codegen'd regexp + cast
     (both sides parse decimal -> nearest double, so parity holds)."""
     polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     miss = np.where(np.isnan(lon))[0]
     if len(miss):
-        gxs, gys = G.parse_wkt_objs(raw[miss])
+        gxs, gys = G.parse_wkt_objs(raw.to_numpy()[miss])
         for k, i in enumerate(miss):
             xs, ys = gxs[k], gys[k]
-            n = len(xs)
-            if n == 1:  # POINT the fast path didn't match (odd spacing)
-                lon[i] = xs[0]
-                lat[i] = ys[0]
-            elif n > 1:
-                lon[i] = np.add.reduce(xs) / n
-                lat[i] = np.add.reduce(ys) / n
-                polys[int(i)] = (xs, ys)
-            else:
+            lon[i], lat[i] = G.rep_point(xs, ys)
+            if len(xs) != 1:  # a POINT the fast path missed stays a point
                 polys[int(i)] = (xs, ys)  # empty geom -> never matches
     return polys
+
+
+def _polys_from_lists(lon, lat, gx: pd.Series, gy: pd.Series) -> dict:
+    """Input adapter for extract_geom(_wkb) output, whose lon/lat are
+    already the rep points: sparse {row: (xs, ys)} for rows whose gx/gy
+    vertex list is not a single point."""
+    polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    for i, (a, b) in enumerate(zip(gx, gy)):
+        if a is None or len(a) != 1:
+            polys[i] = (
+                np.asarray(a if a is not None else [], dtype=np.float64),
+                np.asarray(b if b is not None else [], dtype=np.float64),
+            )
+    return polys
+
+
+_GEOM = T.StructType(
+    [
+        T.StructField("gx", T.ArrayType(T.DoubleType())),
+        T.StructField("gy", T.ArrayType(T.DoubleType())),
+        T.StructField("lon", T.DoubleType()),
+        T.StructField("lat", T.DoubleType()),
+    ]
+)
+
+
+def _geom_frame(geoms: list) -> pd.DataFrame:
+    """extract_geom's UDF output from per-row (xs, ys): the vertex lists
+    plus the rep point."""
+    rep = [G.rep_point(xs, ys) for xs, ys in geoms]
+    lon, lat = np.array(rep, dtype=np.float64).reshape(-1, 2).T
+    return pd.DataFrame(
+        {
+            "gx": [np.asarray(xs).tolist() for xs, _ in geoms],
+            "gy": [np.asarray(ys).tolist() for _, ys in geoms],
+            "lon": lon,
+            "lat": lat,
+        }
+    )
+
+
+def _with_geom(docs: DataFrame, g) -> DataFrame:
+    docs = docs.withColumn("_g", g)
+    for c in _GEOM.fieldNames():
+        docs = docs.withColumn(c, F.col("_g." + c))
+    return docs.drop("_g")
 
 
 def extract_geom(docs: DataFrame) -> DataFrame:
@@ -77,46 +115,11 @@ def extract_geom(docs: DataFrame) -> DataFrame:
     JVM-side (kNN, tiling); pip_join fuses this work into its own UDF."""
     docs = docs.withColumn("geom_wkt", geom_wkt_col())
 
-    schema = T.StructType(
-        [
-            T.StructField("gx", T.ArrayType(T.DoubleType())),
-            T.StructField("gy", T.ArrayType(T.DoubleType())),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
+    @F.pandas_udf(_GEOM)
     def parse_wkt(wkt_s: pd.Series) -> pd.DataFrame:
-        gxs, gys = G.parse_wkt_batch(wkt_s.to_numpy())
-        n = len(gxs)
-        lon = np.full(n, np.nan)
-        lat = np.full(n, np.nan)
-        for i in range(n):
-            m = len(gxs[i])
-            if m == 1:
-                lon[i] = gxs[i][0]
-                lat[i] = gys[i][0]
-            elif m > 1:
-                lon[i] = np.add.reduce(gxs[i]) / m
-                lat[i] = np.add.reduce(gys[i]) / m
-        return pd.DataFrame(
-            {
-                "gx": [a.tolist() for a in gxs],
-                "gy": [a.tolist() for a in gys],
-                "lon": lon,
-                "lat": lat,
-            }
-        )
+        return _geom_frame(list(zip(*G.parse_wkt_batch(wkt_s.to_numpy()))))
 
-    docs = docs.withColumn("_g", parse_wkt(F.col("geom_wkt")))
-    return (
-        docs.withColumn("gx", F.col("_g.gx"))
-        .withColumn("gy", F.col("_g.gy"))
-        .withColumn("lon", F.col("_g.lon"))
-        .withColumn("lat", F.col("_g.lat"))
-        .drop("_g")
-    )
+    return _with_geom(docs, parse_wkt(F.col("geom_wkt")))
 
 
 def extract_geom_wkb(docs: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
@@ -125,259 +128,101 @@ def extract_geom_wkb(docs: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
     it without a WKT round trip. 2-D little-endian POINTs (the 21-byte
     common case) unpack directly; other types go through the full WKB
     reader. Output columns match extract_geom (gx, gy, lon, lat), so
-    pip_join's prepared path runs unchanged."""
+    pip_join runs unchanged."""
     import struct
 
     from . import geometry as GM
 
-    schema = T.StructType(
-        [
-            T.StructField("gx", T.ArrayType(T.DoubleType())),
-            T.StructField("gy", T.ArrayType(T.DoubleType())),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
-    )
+    def xy(v):
+        if v is None:
+            return np.empty(0), np.empty(0)
+        v = bytes(v)
+        if len(v) == 21 and v[:5] == b"\x01\x01\x00\x00\x00":
+            x, y = struct.unpack_from("<2d", v, 5)
+            return np.array([x]), np.array([y])
+        g = GM.parse_wkb(v)
+        if g.kind == "polygon" and len(g.parts[0]) > 1:
+            raise ValueError("POLYGON with interior rings is unsupported")
+        return g.all_points()
 
-    @F.pandas_udf(schema)
+    @F.pandas_udf(_GEOM)
     def parse(bs: pd.Series) -> pd.DataFrame:
-        vals = bs.to_numpy()
-        n = len(vals)
-        gxs: list = [None] * n
-        gys: list = [None] * n
-        lon = np.full(n, np.nan)
-        lat = np.full(n, np.nan)
-        for i, v in enumerate(vals):
-            if v is None:
-                gxs[i], gys[i] = [], []
-                continue
-            v = bytes(v)
-            if len(v) == 21 and v[0] == 1 and v[1:5] == b"\x01\x00\x00\x00":
-                x, y = struct.unpack_from("<2d", v, 5)
-                gxs[i], gys[i] = [x], [y]
-                lon[i], lat[i] = x, y
-                continue
-            g = GM.parse_wkb(v)
-            xs, ys = g.all_points()
-            gxs[i] = xs.tolist()
-            gys[i] = ys.tolist()
-            if len(xs) == 1:
-                lon[i], lat[i] = float(xs[0]), float(ys[0])
-            elif len(xs) > 1:
-                lon[i] = float(np.add.reduce(xs) / len(xs))
-                lat[i] = float(np.add.reduce(ys) / len(ys))
-        return pd.DataFrame({"gx": gxs, "gy": gys, "lon": lon, "lat": lat})
+        return _geom_frame([xy(v) for v in bs.to_numpy()])
 
-    docs = docs.withColumn("_g", parse(F.col(wkb_col)))
-    return (
-        docs.withColumn("gx", F.col("_g.gx"))
-        .withColumn("gy", F.col("_g.gy"))
-        .withColumn("lon", F.col("_g.lon"))
-        .withColumn("lat", F.col("_g.lat"))
-        .drop("_g")
-    )
+    return _with_geom(docs, parse(F.col(wkb_col)))
 
 
-_FUSED_FIRST = T.StructType(
-    [
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("zone_id", T.LongType()),
-        T.StructField("eas_id", T.LongType()),
-    ]
-)
-
-_MATCHES = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("zone_id", T.LongType()),
-            T.StructField("eas_id", T.LongType()),
-        ]
-    )
-)
-
-_FUSED_ALL = T.StructType(
-    [
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("matches", _MATCHES),
-    ]
-)
+_MATCH_FIELDS = [
+    T.StructField("zone_id", T.LongType()),
+    T.StructField("eas_id", T.LongType()),
+]
+_LONLAT = [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
+_OUT = {
+    "first": T.StructType(_LONLAT + _MATCH_FIELDS),
+    "all": T.StructType(
+        _LONLAT
+        + [T.StructField("matches", T.ArrayType(T.StructType(_MATCH_FIELDS)))]
+    ),
+}
 
 
-def _mask_sentinel(zone: np.ndarray, eas: np.ndarray) -> pd.DataFrame:
-    miss = zone < 0
-    return pd.DataFrame(
-        {
-            "zone_id": pd.array(np.where(miss, 0, zone), dtype="Int64"),
-            "eas_id": pd.array(np.where(miss, 0, eas), dtype="Int64"),
-        }
-    ).mask(pd.DataFrame({"zone_id": miss, "eas_id": miss}))
+def _make_pip_udf(bc, level: int, mode: str, polys_of):
+    """The one PIP UDF: rep point -> cell -> staged match against the
+    broadcast PackedCover. `polys_of(lon, lat, *geom)` is the input
+    adapter that turns the geometry columns into the sparse polygon
+    dict (filling polygon rep points in place). Arrow traffic on the
+    raw-docs path: two doubles + a rarely-non-null string in, one small
+    struct out — candidate data never rides on document rows."""
 
-
-def _make_fused_udf(bc, level: int, mode: str):
-    """One UDF does rep point -> cell -> staged match against the
-    broadcast PackedCover. Point coordinates arrive pre-extracted by
-    JVM codegen (pip_join); only the minority polygon rows ship their
-    WKT into Python. Arrow traffic: two doubles + a rarely-non-null
-    string in, one small struct out — candidate data never rides on
-    document rows."""
-    if mode == "first":
-
-        @F.pandas_udf(_FUSED_FIRST)
-        def fused_first(
-            plon: pd.Series, plat: pd.Series, poly_wkt: pd.Series
-        ) -> pd.DataFrame:
-            cov = bc.value
-            lon = plon.to_numpy(dtype=np.float64, na_value=np.nan)
-            lat = plat.to_numpy(dtype=np.float64, na_value=np.nan)
-            polys = _fill_poly_rows(lon, lat, poly_wkt.to_numpy())
-            cell = np_geo_cell(np.nan_to_num(lon, nan=-999.0),
-                               np.nan_to_num(lat, nan=-999.0), level)
-            cell[np.isnan(lon)] = -1
-            zone, eas = IX.first_match_packed(cov, cell, lon, lat, polys)
-            out = _mask_sentinel(zone, eas)
-            out.insert(0, "lat", lat)
-            out.insert(0, "lon", lon)
-            return out
-
-        return fused_first
-
-    @F.pandas_udf(_FUSED_ALL)
-    def fused_all(
-        plon: pd.Series, plat: pd.Series, poly_wkt: pd.Series
-    ) -> pd.DataFrame:
+    @F.pandas_udf(_OUT[mode])
+    def pip(plon: pd.Series, plat: pd.Series, *geom: pd.Series) -> pd.DataFrame:
         cov = bc.value
         lon = plon.to_numpy(dtype=np.float64, na_value=np.nan)
         lat = plat.to_numpy(dtype=np.float64, na_value=np.nan)
-        polys = _fill_poly_rows(lon, lat, poly_wkt.to_numpy())
+        polys = polys_of(lon, lat, *geom)
         cell = np_geo_cell(np.nan_to_num(lon, nan=-999.0),
                            np.nan_to_num(lat, nan=-999.0), level)
         cell[np.isnan(lon)] = -1
-        matches = IX.all_matches_packed(cov, cell, lon, lat, polys)
-        return pd.DataFrame(
-            {
-                "lon": lon,
-                "lat": lat,
-                "matches": [
-                    [{"zone_id": z, "eas_id": e} for z, e in m] for m in matches
-                ],
-            }
-        )
+        out = pd.DataFrame({"lon": lon, "lat": lat})
+        if mode == "first":
+            zone, eas = IX.first_match_packed(cov, cell, lon, lat, polys)
+            miss = zone < 0  # the -1 sentinel becomes NULL
+            out["zone_id"] = pd.arrays.IntegerArray(zone, miss)
+            out["eas_id"] = pd.arrays.IntegerArray(eas, miss)
+        else:
+            matches = IX.all_matches_packed(cov, cell, lon, lat, polys)
+            out["matches"] = [
+                [{"zone_id": z, "eas_id": e} for z, e in m] for m in matches
+            ]
+        return out
 
-    return fused_all
-
-
-_PRE_FIRST = T.StructType(
-    [
-        T.StructField("zone_id", T.LongType()),
-        T.StructField("eas_id", T.LongType()),
-    ]
-)
+    return pip
 
 
-def _polys_from_lists(gx: pd.Series, gy: pd.Series) -> dict:
-    """Sparse {row: (xs, ys)} for rows whose vertex list is not a single
-    point (extract_geom output carries gx/gy as list columns)."""
-    polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for i, a in enumerate(gx):
-        if a is None or len(a) != 1:
-            xs = np.asarray(a, dtype=np.float64) if a is not None else np.empty(0)
-            ys_raw = gy.iloc[i]
-            ys = np.asarray(ys_raw, dtype=np.float64) if ys_raw is not None else np.empty(0)
-            polys[i] = (xs, ys)
-    return polys
-
-
-def _make_prepared_udf(bc, level: int, mode: str):
-    """Variant over already-extracted geometry columns (extract_geom
-    output) — avoids re-parsing when the caller needs gx/gy anyway."""
-    if mode == "first":
-
-        @F.pandas_udf(_PRE_FIRST)
-        def prep_first(
-            lon: pd.Series, lat: pd.Series, gx: pd.Series, gy: pd.Series
-        ) -> pd.DataFrame:
-            cov = bc.value
-            lo = lon.to_numpy(dtype=np.float64)
-            la = lat.to_numpy(dtype=np.float64)
-            polys = _polys_from_lists(gx, gy)
-            cell = np_geo_cell(np.nan_to_num(lo, nan=-999.0),
-                               np.nan_to_num(la, nan=-999.0), level)
-            cell[np.isnan(lo)] = -1
-            zone, eas = IX.first_match_packed(cov, cell, lo, la, polys)
-            return _mask_sentinel(zone, eas)
-
-        return prep_first
-
-    @F.pandas_udf(_MATCHES)
-    def prep_all(
-        lon: pd.Series, lat: pd.Series, gx: pd.Series, gy: pd.Series
-    ) -> pd.Series:
-        cov = bc.value
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        polys = _polys_from_lists(gx, gy)
-        cell = np_geo_cell(np.nan_to_num(lo, nan=-999.0),
-                           np.nan_to_num(la, nan=-999.0), level)
-        cell[np.isnan(lo)] = -1
-        matches = IX.all_matches_packed(cov, cell, lo, la, polys)
-        return pd.Series(
-            [[{"zone_id": z, "eas_id": e} for z, e in m] for m in matches]
-        )
-
-    return prep_all
-
-
-def pip_join(
-    docs: DataFrame,
-    zindex: IX.ZoneIndex,
-    mode: str = "first",
-    engine: str = "arrow",
-) -> DataFrame:
+def pip_join(docs: DataFrame, zindex: IX.ZoneIndex, mode: str = "first") -> DataFrame:
     """Join documents to zones by geometric intersection.
 
-    docs: the raw document table (spans nested) OR extract_geom output.
+    docs: the raw document table (spans nested, or a geom_wkt column)
+      OR extract_geom / extract_geom_wkb output (gx, gy, lon, lat).
     zindex: index.zone_index(...) — the broadcast PackedCover.
     mode 'first': one row per doc, first (lowest zone_id) match, NULLs
       when none — OGR SQL LEFT JOIN semantics (ogr_sql_dialect.rst:490).
     mode 'all': one row per intersecting pair, NULL row when none —
       overlay-join semantics (generic/ogrlayer.cpp:2062).
-    engine 'arrow' (default): everything through the fused pandas UDF.
-      'auto': point documents run the pure-JVM Catalyst leg (jvmpip.py
-      — zero Arrow/Python on the hot path), the polygon minority keeps
-      the Arrow kernel; legs are unioned. Both produce identical rows
-      (tests assert it). MEASURED (8M docs, local[32], interleaved
-      reps): arrow best 5.4 s / auto best 10.9 s — Catalyst's
-      higher-order-function lambdas evaluate interpreted per vertex,
-      which costs more than the Arrow IPC they avoid, so the Arrow
-      kernel remains the default; 'auto' exists for clusters where
-      Python workers are unavailable or their memory is the constraint.
+
+    Either input shape runs the same vectorized pandas UDF; only its
+    input adapter differs. The output gains the rep point (lon, lat)
+    and the match (zone_id, eas_id).
     """
-    if mode not in ("first", "all"):
+    if mode not in _OUT:
         raise ValueError(f"mode must be 'first' or 'all', got {mode}")
-    if engine not in ("auto", "arrow"):
-        raise ValueError(f"engine must be 'auto' or 'arrow', got {engine}")
 
-    if engine == "auto" and "gx" not in docs.columns:
-        return _pip_join_hybrid(docs, zindex, mode)
-
-    if "gx" in docs.columns:  # pre-extracted geometry path
-        udf = _make_prepared_udf(zindex.bc, zindex.level, mode)
-        m = udf(F.col("lon"), F.col("lat"), F.col("gx"), F.col("gy"))
-        if mode == "first":
-            j = docs.withColumn("_m", m)
-            return (
-                j.withColumn("zone_id", F.col("_m.zone_id"))
-                .withColumn("eas_id", F.col("_m.eas_id"))
-                .drop("_m")
-            )
-        j = docs.withColumn("_matches", m)
-    else:  # fused path: parse + locate + match in one UDF
-        if "geom_wkt" in docs.columns:
-            src = docs
-        else:
-            src = docs.withColumn("geom_wkt", geom_wkt_col())
+    if "gx" in docs.columns:  # pre-extracted geometry: no re-parse
+        src, args, polys_of = docs, ("lon", "lat", "gx", "gy"), _polys_from_lists
+    else:
+        src = docs if "geom_wkt" in docs.columns else docs.withColumn(
+            "geom_wkt", geom_wkt_col()
+        )
         # point coords extracted JVM-side (whole-stage codegen regexp +
         # cast); only non-point rows ship their WKT through Arrow
         src = (
@@ -391,67 +236,22 @@ def pip_join(
                 "_pwkt", F.when(F.col("_plon").isNull(), F.col("geom_wkt"))
             )
         )
-        udf = _make_fused_udf(zindex.bc, zindex.level, mode)
-        j = src.withColumn(
-            "_m", udf(F.col("_plon"), F.col("_plat"), F.col("_pwkt"))
-        ).drop("_plon", "_plat", "_pwkt")
-        if mode == "first":
-            return (
-                j.withColumn("lon", F.col("_m.lon"))
-                .withColumn("lat", F.col("_m.lat"))
-                .withColumn("zone_id", F.col("_m.zone_id"))
-                .withColumn("eas_id", F.col("_m.eas_id"))
-                .drop("_m")
-            )
-        j = (
-            j.withColumn("lon", F.col("_m.lon"))
-            .withColumn("lat", F.col("_m.lat"))
-            .withColumn("_matches", F.col("_m.matches"))
-            .drop("_m")
-        )
+        args, polys_of = ("_plon", "_plat", "_pwkt"), _fill_poly_rows
 
-    ex = j.select("*", F.explode_outer("_matches").alias("_e"))
+    udf = _make_pip_udf(zindex.bc, zindex.level, mode, polys_of)
+    j = (
+        src.withColumn("_m", udf(*map(F.col, args)))
+        .drop("_plon", "_plat", "_pwkt")
+        .withColumn("lon", F.col("_m.lon"))
+        .withColumn("lat", F.col("_m.lat"))
+    )
+    if mode == "all":
+        j = j.withColumn("_m", F.explode_outer("_m.matches"))
     return (
-        ex.withColumn("zone_id", F.col("_e.zone_id"))
-        .withColumn("eas_id", F.col("_e.eas_id"))
-        .drop("_matches", "_e")
+        j.withColumn("zone_id", F.col("_m.zone_id"))
+        .withColumn("eas_id", F.col("_m.eas_id"))
+        .drop("_m")
     )
-
-
-def _pip_join_hybrid(docs: DataFrame, zindex: IX.ZoneIndex, mode: str) -> DataFrame:
-    """engine='auto': point rows (WKT matches the POINT regexp, parsed
-    by JVM codegen) take the pure-JVM Catalyst leg — broadcast cover
-    join + expression ray cast, zero Arrow/Python (jvmpip.py); the
-    polygon/malformed minority takes the fused Arrow kernel. Legs are
-    unioned by name; both are map-only over a broadcast, so the
-    document side still never shuffles. The source is scanned twice
-    (once per leg) — at 95% points that trades one cheap extra codegen
-    scan for a 20x cut in Arrow IPC traffic, the measured 8->32-core
-    bottleneck (BENCH/BASELINE.md)."""
-    from . import jvmpip
-
-    if "geom_wkt" in docs.columns:
-        src = docs
-    else:
-        src = docs.withColumn("geom_wkt", geom_wkt_col())
-    src = src.withColumn(
-        "_plon", F.regexp_extract("geom_wkt", _POINT_RE, 1).cast("double")
-    ).withColumn(
-        "_plat", F.regexp_extract("geom_wkt", _POINT_RE, 2).cast("double")
-    )
-
-    pts = (
-        src.filter(F.col("_plon").isNotNull())
-        .withColumn("lon", F.col("_plon"))
-        .withColumn("lat", F.col("_plat"))
-        .drop("_plon", "_plat")
-    )
-    cover = zindex.cover_df(docs.sparkSession)
-    jvm_leg = jvmpip.pip_points_jvm(pts, cover, zindex.level, mode=mode)
-
-    rest = src.filter(F.col("_plon").isNull()).drop("_plon", "_plat")
-    arrow_leg = pip_join(rest, zindex, mode=mode, engine="arrow")
-    return jvm_leg.unionByName(arrow_leg)
 
 
 def pip_join_full(
@@ -461,6 +261,6 @@ def pip_join_full(
     level: int | None = None,
     mode: str = "first",
 ) -> DataFrame:
-    """Convenience: build + broadcast the packed cover, fused join."""
+    """Convenience: build + broadcast the packed cover, then pip_join."""
     zidx = IX.zone_index(spark, zones_pdf, level)
     return pip_join(docs, zidx, mode=mode)

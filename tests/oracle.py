@@ -33,6 +33,9 @@ def pip_oracle(docs_pdf: pd.DataFrame, zones_pdf: pd.DataFrame, mode: str = "fir
     rows = []
     for k, doc_id in enumerate(docs_pdf["doc_id"]):
         dx, dy = gxs[k], gys[k]
+        if not len(dx):  # EMPTY geometry intersects nothing
+            rows.append({"doc_id": doc_id, "zone_id": None, "eas_id": None})
+            continue
         bx0, bx1, by0, by1 = dx.min(), dx.max(), dy.min(), dy.max()
         cand = np.where(
             (bx1 >= zxmin) & (bx0 <= zxmax) & (by1 >= zymin) & (by0 <= zymax)
