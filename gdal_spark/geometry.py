@@ -224,8 +224,8 @@ class Geom:
             for rings in polys:
                 for r in rings:
                     out.append(r)
-        xs = np.concatenate([np.asarray(r[0], np.float64) for r in out])
-        ys = np.concatenate([np.asarray(r[1], np.float64) for r in out])
+        xs = np.concatenate([np.empty(0)] + [np.asarray(r[0], np.float64) for r in out])
+        ys = np.concatenate([np.empty(0)] + [np.asarray(r[1], np.float64) for r in out])
         return xs, ys
 
     def boundary_segments(self):
@@ -398,6 +398,8 @@ def to_wkt(g: Geom, prec: int = 7) -> str:
 # ------------------------------------------------------------------- WKB
 _WKB_POINT, _WKB_LINESTRING, _WKB_POLYGON = 1, 2, 3
 _WKB_MULTIPOINT, _WKB_MULTILINESTRING, _WKB_MULTIPOLYGON = 4, 5, 6
+_WKB_CODES = {"point": 1, "linestring": 2, "polygon": 3, "multipoint": 4,
+              "multilinestring": 5, "multipolygon": 6}
 
 
 def parse_wkb(buf: bytes) -> Geom:
@@ -443,6 +445,8 @@ def parse_wkb_at(buf: bytes, pos: list, step_deg=None) -> Geom:
 
     if base == _WKB_POINT:
         xs, ys, zs = coords(1)
+        if np.isnan(xs[0]) and np.isnan(ys[0]):  # POINT EMPTY
+            return Geom("point", [])
         return Geom("point", [(xs, ys)], zs=zs)
     if base == _WKB_LINESTRING:
         (n,) = take("I", bo)
@@ -487,6 +491,10 @@ def to_wkb(g: Geom) -> bytes:
             out += struct.pack("<2d", x, y)
         return out
 
+    if not g.parts:  # EMPTY: a NaN NaN point, else a zero count
+        if g.kind == "point":
+            return struct.pack("<BI2d", 1, _WKB_POINT, np.nan, np.nan)
+        return struct.pack("<BII", 1, _WKB_CODES[g.kind], 0)
     if g.kind == "point":
         xs, ys = g.parts[0]
         return struct.pack("<BI2d", 1, _WKB_POINT, xs[0], ys[0])

@@ -14,13 +14,16 @@ semantics:
    prime cycle 7,11,...,43, running &0xffff)
  - splitmix64 is the deterministic fixture hash (FIXTURES.md)
 
-All batch functions take numpy arrays and never loop per row in Python
-(the only Python loops are over polygon *vertices*, bounded and tiny).
+All batch functions take numpy or Arrow arrays and never loop per row
+in Python (the only Python loops are over polygon *vertices*, bounded
+and tiny), but for the per-string WKT parser, parse_wkt_objs.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
 # ------------------------------------------------------------------ hashing
@@ -53,6 +56,8 @@ def _parse_wkt_one(s) -> tuple[np.ndarray, np.ndarray]:
         if ")" in body:
             raise ValueError(f"POLYGON with interior rings is unsupported: {s[:40]}")
         flat = np.array(body.replace(",", " ").split(), dtype=np.float64)
+        if len(flat) % 2:
+            raise ValueError(f"POLYGON with an odd coordinate count: {s[:40]}")
         xs = flat[0::2].copy()
         ys = flat[1::2].copy()
         if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
@@ -62,9 +67,9 @@ def _parse_wkt_one(s) -> tuple[np.ndarray, np.ndarray]:
 
 
 def parse_wkt_objs(objs) -> tuple[list[np.ndarray], list[np.ndarray]]:
-    """Parse a (small) batch of WKT strings known to be mostly
-    non-points — plain Python loop over the raw objects, no pandas
-    indexing overhead."""
+    """WKT strings one by one -> per-row (xs, ys), as _parse_wkt_one;
+    mirrors OGRGeometryFactory::createFromWkt for POINT and POLYGON
+    (gdal/ogr/ogrgeometryfactory.cpp:374). The oracle's parser."""
     xs_out: list[np.ndarray] = []
     ys_out: list[np.ndarray] = []
     for s in objs:
@@ -74,45 +79,99 @@ def parse_wkt_objs(objs) -> tuple[list[np.ndarray], list[np.ndarray]]:
     return xs_out, ys_out
 
 
-def parse_wkt_batch(wkt: "np.ndarray") -> tuple[list[np.ndarray], list[np.ndarray]]:
-    """Parse POINT/POLYGON WKT batch -> per-row (xs, ys) vertex arrays.
+parse_wkt_batch = parse_wkt_objs
 
-    POINT -> length-1 arrays; POLYGON -> exterior ring, closing vertex
-    dropped. Mirrors OGRGeometryFactory::createFromWkt for the two types
-    the fixtures use (gdal/ogr/ogrgeometryfactory.cpp:374).
 
-    The dominant POINT case is vectorized through pandas' C regex
-    engine; only polygons (and malformed rows) take the Python path.
-    """
-    import pandas as pd
+# The two shapes the Arrow kernels parse; any other string (EMPTY,
+# padding whitespace, interior rings, other types) goes to _parse_wkt_one.
+_POINT_RE = r"^POINT\((?P<x>[-0-9.eE+]+) (?P<y>[-0-9.eE+]+)\)$"
+_RING_RE = r"^POLYGON\(\([-0-9.eE+ ,]*\)\)$"
 
-    ser = pd.Series(wkt, dtype=object)
-    m = ser.str.extract(r"^POINT\(([-0-9.eE+]+) ([-0-9.eE+]+)\)$", expand=True)
-    px = pd.to_numeric(m[0], errors="coerce").to_numpy()
-    py_ = pd.to_numeric(m[1], errors="coerce").to_numpy()
+
+def _arrow_rows(wkt: pa.Array):
+    """The Arrow-kernel half of parse_wkt_arrow: [(rows, counts, xs,
+    ys)] for the point rows and the single-ring polygon rows, and the
+    mask of the non-null rows left over. Raises ArrowInvalid when a
+    token is not a number."""
+    # flatten(), not field(): the children must carry the no-match nulls
+    pt = pc.extract_regex(wkt, _POINT_RE).flatten()
+    px, py = (pc.cast(a, pa.float64()).to_numpy(zero_copy_only=False) for a in pt)
     is_pt = ~np.isnan(px)
+    is_pg = pc.fill_null(pc.match_substring_regex(wkt, _RING_RE), False)
+    body = pc.utf8_slice_codeunits(wkt.filter(is_pg), 9, -2)  # inside (( ))
+    toks = pc.ascii_split_whitespace(pc.replace_substring(body, ",", " "))
+    flat = pc.cast(toks.flatten(), pa.float64()).to_numpy()
+    nv, odd = np.divmod(np.diff(toks.offsets.to_numpy()), 2)
+    if odd.any():
+        raise pa.ArrowInvalid("odd coordinate count")
+    xs, ys = flat[0::2], flat[1::2]
+    # drop the closing vertex, as _parse_wkt_one does
+    last = np.cumsum(nv) - 1
+    ring = np.flatnonzero(nv > 1)
+    first, last = last[ring] - nv[ring] + 1, last[ring]
+    closed = (xs[first] == xs[last]) & (ys[first] == ys[last])
+    keep = np.ones(len(xs), dtype=bool)
+    keep[last[closed]] = False
+    nv[ring[closed]] -= 1
+    is_pg = is_pg.to_numpy(zero_copy_only=False)
+    pts = np.flatnonzero(is_pt)
+    parts = [
+        (pts, np.ones(len(pts), np.int64), px[pts], py[pts]),
+        (np.flatnonzero(is_pg), nv, xs[keep], ys[keep]),
+    ]
+    rest = ~(is_pt | is_pg) & wkt.is_valid().to_numpy(zero_copy_only=False)
+    return parts, rest
 
-    xs_out: list[np.ndarray] = [None] * len(ser)  # type: ignore[list-item]
-    ys_out: list[np.ndarray] = [None] * len(ser)  # type: ignore[list-item]
-    for i in np.where(is_pt)[0]:
-        xs_out[i] = np.array([px[i]])
-        ys_out[i] = np.array([py_[i]])
-    rest = np.where(~is_pt)[0]
-    gxs, gys = parse_wkt_objs(ser.to_numpy()[rest])
-    for k, i in enumerate(rest):
-        xs_out[i] = gxs[k]
-        ys_out[i] = gys[k]
-    return xs_out, ys_out
+
+def parse_wkt_arrow(wkt: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """POINT/POLYGON WKT array -> CSR vertex arrays (off[B+1], xs, ys),
+    row i's vertices at xs[off[i]:off[i+1]]; the same values, bit for
+    bit, as parse_wkt_objs.
+
+    `POINT(x y)` is parsed by RE2 extract_regex + cast, and
+    `POLYGON((x y, ...))` by a whitespace split + cast of its tokens;
+    a null row has no vertices. Every other string, or the whole batch
+    when an Arrow cast fails, goes to the per-string parser, which also
+    raises its errors (interior rings, unsupported types)."""
+    try:
+        parts, rest = _arrow_rows(wkt)
+    except pa.ArrowInvalid:
+        parts, rest = [], wkt.is_valid().to_numpy(zero_copy_only=False)
+    if rest.any():
+        o, fx, fy = csr_from_lists(*parse_wkt_objs(wkt.filter(pa.array(rest)).to_pylist()))
+        parts.append((np.flatnonzero(rest), np.diff(o), fx, fy))
+    cnt = np.zeros(len(wkt), dtype=np.int64)
+    for rows, n, _, _ in parts:
+        cnt[rows] = n
+    off = np.concatenate([[0], np.cumsum(cnt)])
+    xs, ys = np.empty(off[-1]), np.empty(off[-1])
+    for rows, n, vx, vy in parts:
+        at = np.repeat(off[rows] - np.cumsum(n) + n, n) + np.arange(len(vx))
+        xs[at], ys[at] = vx, vy
+    return off, xs, ys
 
 
-def rep_point(xs: np.ndarray, ys: np.ndarray) -> tuple[float, float]:
-    """Representative point of a vertex list: the vertex mean, folded by
-    np.add.reduce so the sum order matches the oracle's (SURVEY.md
-    §7.4); the point itself for one vertex, NaN for an empty geometry."""
-    n = len(xs)
-    if n == 0:
-        return np.nan, np.nan
-    return np.add.reduce(xs) / n, np.add.reduce(ys) / n
+def csr_from_lists(gx, gy) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-row vertex arrays -> the CSR form of parse_wkt_arrow."""
+    off = np.concatenate([[0], np.cumsum([len(a) for a in gx], dtype=np.int64)])
+    return off, np.concatenate([np.empty(0), *gx]), np.concatenate([np.empty(0), *gy])
+
+
+def rep_points(off: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each CSR row's representative point: the vertex mean, NaN for
+    no vertices. Rows of one vertex count are reduced as a C-contiguous
+    block along axis 1, which folds each row exactly as np.add.reduce
+    over it alone (np.add.reduceat would not): the oracle's sum order
+    (SURVEY.md §7.4)."""
+    cnt = np.diff(off)
+    px = np.full(len(cnt), np.nan)
+    py = np.full(len(cnt), np.nan)
+    for n in np.unique(cnt[cnt > 0]):
+        rows = np.flatnonzero(cnt == n)
+        take = off[rows, None] + np.arange(n)
+        px[rows] = np.add.reduce(xs[take], axis=1) / n
+        py[rows] = np.add.reduce(ys[take], axis=1) / n
+    return px, py
 
 
 # ------------------------------------------------------- point in polygon

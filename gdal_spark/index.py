@@ -11,10 +11,12 @@ re-expressed for Spark's execution model:
   broadcast variable.
 
 The big documents side never joins, never shuffles, and never carries a
-byte of candidate data per row: a single vectorized pandas UDF looks its
-cell up in the broadcast index (np.searchsorted) and runs the staged
-exact test (OGRLayer::FilterGeometry, generic/ogrlayer.cpp:1357 — bbox
-reject :1377-1382, exact Intersects :1449-1462) over flat numpy arrays.
+byte of candidate data per row: a single Arrow UDF looks its cell up
+in the broadcast index (np.searchsorted) and runs the staged exact test
+(OGRLayer::FilterGeometry, generic/ogrlayer.cpp:1357 — bbox reject
+:1377-1382, exact Intersects :1449-1462) over flat numpy arrays: the
+docs arrive as CSR vertex arrays, so polygon docs too are handled with
+no per-doc or per-pair Python.
 
 Why not a broadcast hash JOIN against a cover DataFrame: that plan
 re-serializes the driver-local cover on every action and — worse —
@@ -148,21 +150,39 @@ def zone_index(
 
 
 # ---------------------------------------------------------------- numpy side
+def _doc_bboxes(px, py, off, xs, ys, is_poly):
+    """Per-doc (xmin, xmax, ymin, ymax): the rep point for a point doc,
+    the vertex extent of a polygon doc (one reduceat over the CSR runs),
+    NaN for a doc without vertices, which then fails every bbox test."""
+    runs = np.flatnonzero(np.diff(off))
+    poly = is_poly[runs]
+    rows = runs[poly]
+    out = []
+    for p, v, red in ((px, xs, np.minimum), (px, xs, np.maximum),
+                      (py, ys, np.minimum), (py, ys, np.maximum)):
+        b = np.where(is_poly, np.nan, p)
+        if len(runs):
+            b[rows] = red.reduceat(v[: off[-1]], off[runs])[poly]
+        out.append(b)
+    return out
+
+
 def eval_pairs_packed(
     cov: PackedCover,
     cell: np.ndarray,
     px: np.ndarray,
     py: np.ndarray,
-    polys: dict | None = None,
+    geom: tuple | None = None,
 ):
     """Expand each doc to its cell's candidate zones and run the staged
     test. Returns (doc_idx, zone_pos) arrays of HIT pairs only, ordered
     by (doc, zone_id asc) — candidates are pre-sorted in the cover.
 
     px/py: per-doc representative point (the point itself for point
-    docs). polys: sparse {row_index: (xs, ys)} for the minority of docs
-    that are polygons — point docs (the hot path) never touch Python
-    objects; None means every doc is a point.
+    docs). geom: the docs' CSR vertex arrays (off[B+1], xs, ys), as
+    geomlite.parse_wkt_arrow returns them; a doc with other than one
+    vertex is a polygon, and one with none never matches. None means
+    every doc is a point. No step loops over docs or pairs in Python.
 
     Stage structure mirrors FilterGeometry (ogrlayer.cpp:1357):
       1. candidate cells (np.searchsorted on the broadcast index) —
@@ -190,25 +210,16 @@ def eval_pairs_packed(
     within = np.arange(total) - np.repeat(cum0, ncand)
     z = cov.cand_zone[np.repeat(start, ncand) + within].astype(np.int64)
 
-    if polys:
-        dxmin = px.copy()
-        dxmax = px.copy()
-        dymin = py.copy()
-        dymax = py.copy()
-        is_poly = np.zeros(B, dtype=bool)
-        for i, (xs, ys) in polys.items():
-            is_poly[i] = True
-            if len(xs):
-                dxmin[i] = xs.min()
-                dxmax[i] = xs.max()
-                dymin[i] = ys.min()
-                dymax[i] = ys.max()
-            else:
-                dxmin[i] = dxmax[i] = dymin[i] = dymax[i] = np.nan
-    else:
-        dxmin = dxmax = px
-        dymin = dymax = py
-        is_poly = None
+    is_poly = None
+    dxmin = dxmax = px
+    dymin = dymax = py
+    if geom is not None:
+        off, xs, ys = geom
+        is_poly = np.diff(off) != 1
+        if is_poly.any():
+            dxmin, dxmax, dymin, dymax = _doc_bboxes(px, py, off, xs, ys, is_poly)
+        else:
+            is_poly = None
 
     keep = (
         (dxmax[doc_idx] >= cov.zxmin[z])
@@ -240,35 +251,29 @@ def eval_pairs_packed(
             )
         poly_rows = np.where(~pt_pair)[0]
         if len(poly_rows):
-            # pad the doc rings once, then one fully vectorized
-            # intersects over all polygon pairs (no per-pair Python)
-            plen = np.array(
-                [len(polys[int(d_of_pair[r])][0]) for r in poly_rows],
-                dtype=np.int64,
+            # pad each pair's doc ring by repeating its last vertex (one
+            # gather; every doc here has a vertex, else its bbox is NaN),
+            # then one vectorized intersects over all polygon pairs
+            d = d_of_pair[poly_rows]
+            dlen = off[d + 1] - off[d]
+            dtake = off[d, None] + np.minimum(
+                np.arange(int(dlen.max()))[None, :], dlen[:, None] - 1
             )
-            Ld = max(int(plen.max()), 1)
-            DX = np.zeros((len(poly_rows), Ld))
-            DY = np.zeros((len(poly_rows), Ld))
-            for k, r in enumerate(poly_rows):
-                xs, ys = polys[int(d_of_pair[r])]
-                DX[k, : len(xs)] = xs
-                DY[k, : len(ys)] = ys
-            ok = plen >= 1
-            res = G.intersects_pairs_padded(
-                DX, DY, plen, RX[poly_rows], RY[poly_rows], rl[poly_rows]
+            hits[poly_rows] = G.intersects_pairs_padded(
+                xs[dtake], ys[dtake], dlen,
+                RX[poly_rows], RY[poly_rows], rl[poly_rows],
             )
-            hits[poly_rows] = res & ok
     hit_pairs = sel[hits]
     return doc_idx[hit_pairs], z[hit_pairs]
 
 
-def first_match_packed(cov, cell, px, py, polys=None):
+def first_match_packed(cov, cell, px, py, geom=None):
     """Per doc the hit with the LOWEST zone_id, -1 sentinel when none —
     flat int64 outputs, no per-row Python (the benchmark hot loop)."""
     B = len(px)
     zone_out = np.full(B, -1, dtype=np.int64)
     eas_out = np.full(B, -1, dtype=np.int64)
-    doc_idx, zpos = eval_pairs_packed(cov, cell, px, py, polys)
+    doc_idx, zpos = eval_pairs_packed(cov, cell, px, py, geom)
     if len(doc_idx):
         # pairs are ordered (doc asc, zone_id asc) -> first hit per doc
         d_first, first_at = np.unique(doc_idx, return_index=True)
@@ -277,14 +282,11 @@ def first_match_packed(cov, cell, px, py, polys=None):
     return zone_out, eas_out
 
 
-def all_matches_packed(cov, cell, px, py, polys=None) -> list[list[tuple[int, int]]]:
-    """Per doc, the ordered list of matching (zone_id, eas_id) — empty
-    when no zone intersects (overlay-join semantics)."""
-    B = len(px)
-    out: list[list[tuple[int, int]]] = [[] for _ in range(B)]
-    doc_idx, zpos = eval_pairs_packed(cov, cell, px, py, polys)
-    zid = cov.zone_id[zpos]
-    eas = cov.eas_id[zpos]
-    for k in range(len(doc_idx)):
-        out[int(doc_idx[k])].append((int(zid[k]), int(eas[k])))
-    return out
+def all_matches_packed(cov, cell, px, py, geom=None):
+    """Every match per doc in CSR form: (off[B+1], zone_id, eas_id),
+    doc i's matches ordered by zone_id at [off[i]:off[i+1]] — an empty
+    run when no zone intersects (overlay-join semantics)."""
+    doc_idx, zpos = eval_pairs_packed(cov, cell, px, py, geom)
+    off = np.zeros(len(px) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(doc_idx, minlength=len(px)), out=off[1:])
+    return off, cov.zone_id[zpos], cov.eas_id[zpos]

@@ -5,13 +5,15 @@ PIP join = the reference's spatial-filter / overlay candidate pattern
 overlay Intersection's per-feature pushdown, :2128-2198) restated as:
 
   zones --(driver build, CSR numpy)--> broadcast PackedCover (index.py)
-  docs  --(ONE vectorized pandas UDF: parse WKT -> rep point -> cell
-           lookup in the broadcast -> bbox reject -> exact PIP)--> matches
+  docs  --(ONE Arrow UDF over geom_wkt: Arrow-kernel WKT parse -> CSR
+           vertex arrays + rep point -> cell lookup in the broadcast ->
+           bbox reject -> exact PIP -> Arrow struct out)--> matches
 
 The whole join is a single map stage: no shuffle, no join, no row
-duplication, no per-row Python, and the only cross-task data movement
-is the broadcast index itself (megabytes, once per executor). Left /
-first-match semantics reproduce OGR SQL's one-to-first-match LEFT JOIN
+duplication, no per-row Python for POINT / single-ring POLYGON docs,
+and the only cross-task data movement is the broadcast index itself
+(megabytes, once per executor). Left / first-match semantics
+reproduce OGR SQL's one-to-first-match LEFT JOIN
 (ogr_sql_dialect.rst:483-490); 'all' mode reproduces the overlay join's
 every-intersecting-pair semantics (generic/ogrlayer.cpp:2062).
 
@@ -24,6 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,40 +45,19 @@ def geom_wkt_col():
     )["text"]
 
 
+# the point shape of geomlite's Arrow parser, in the positional-group
+# form JVM regexp_extract takes
 _POINT_RE = r"^POINT\(([-0-9.eE+]+) ([-0-9.eE+]+)\)$"
 
 
-def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: pd.Series) -> dict:
-    """Input adapter for the raw-docs path. Rows whose lon is NaN carry
-    a non-point (or missing) WKT in `raw`: parse them Python-side
-    (bounded minority), fill their rep point in place, and return the
-    sparse {row: (xs, ys)} dict. Point rows never touch Python: the JVM
-    already extracted their coordinates with codegen'd regexp + cast
-    (both sides parse decimal -> nearest double, so parity holds)."""
-    polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    miss = np.where(np.isnan(lon))[0]
-    if len(miss):
-        gxs, gys = G.parse_wkt_objs(raw.to_numpy()[miss])
-        for k, i in enumerate(miss):
-            xs, ys = gxs[k], gys[k]
-            lon[i], lat[i] = G.rep_point(xs, ys)
-            if len(xs) != 1:  # a POINT the fast path missed stays a point
-                polys[int(i)] = (xs, ys)  # empty geom -> never matches
-    return polys
+def _f64(a: pa.Array) -> np.ndarray:
+    return a.to_numpy(zero_copy_only=False)  # a copy only when a NULL needs NaN
 
 
-def _polys_from_lists(lon, lat, gx: pd.Series, gy: pd.Series) -> dict:
-    """Input adapter for extract_geom(_wkb) output, whose lon/lat are
-    already the rep points: sparse {row: (xs, ys)} for rows whose gx/gy
-    vertex list is not a single point."""
-    polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for i, (a, b) in enumerate(zip(gx, gy)):
-        if a is None or len(a) != 1:
-            polys[i] = (
-                np.asarray(a if a is not None else [], dtype=np.float64),
-                np.asarray(b if b is not None else [], dtype=np.float64),
-            )
-    return polys
+def _nan_null(a: np.ndarray) -> pa.Array:
+    """A double column with NaN written as NULL: an EMPTY geometry's
+    rep point is NULL."""
+    return pa.array(a, mask=np.isnan(a))
 
 
 _GEOM = T.StructType(
@@ -87,18 +70,14 @@ _GEOM = T.StructType(
 )
 
 
-def _geom_frame(geoms: list) -> pd.DataFrame:
-    """extract_geom's UDF output from per-row (xs, ys): the vertex lists
-    plus the rep point."""
-    rep = [G.rep_point(xs, ys) for xs, ys in geoms]
-    lon, lat = np.array(rep, dtype=np.float64).reshape(-1, 2).T
-    return pd.DataFrame(
-        {
-            "gx": [np.asarray(xs).tolist() for xs, _ in geoms],
-            "gy": [np.asarray(ys).tolist() for _, ys in geoms],
-            "lon": lon,
-            "lat": lat,
-        }
+def _geom_struct(off: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> pa.Array:
+    """extract_geom's UDF output from CSR vertex arrays: the vertex
+    lists (sharing the CSR buffers) plus the rep point."""
+    o = pa.array(off, pa.int32())
+    return pa.StructArray.from_arrays(
+        [pa.ListArray.from_arrays(o, xs), pa.ListArray.from_arrays(o, ys),
+         *map(_nan_null, G.rep_points(off, xs, ys))],
+        names=_GEOM.fieldNames(),
     )
 
 
@@ -115,9 +94,9 @@ def extract_geom(docs: DataFrame) -> DataFrame:
     JVM-side (kNN, tiling); pip_join fuses this work into its own UDF."""
     docs = docs.withColumn("geom_wkt", geom_wkt_col())
 
-    @F.pandas_udf(_GEOM)
-    def parse_wkt(wkt_s: pd.Series) -> pd.DataFrame:
-        return _geom_frame(list(zip(*G.parse_wkt_batch(wkt_s.to_numpy()))))
+    @F.arrow_udf(_GEOM)
+    def parse_wkt(wkt: pa.Array) -> pa.Array:
+        return _geom_struct(*G.parse_wkt_arrow(wkt))
 
     return _with_geom(docs, parse_wkt(F.col("geom_wkt")))
 
@@ -127,7 +106,8 @@ def extract_geom_wkb(docs: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
     WKB the canonical geometry encoding, so the join path must consume
     it without a WKT round trip. 2-D little-endian POINTs (the 21-byte
     common case) unpack directly; other types go through the full WKB
-    reader. Output columns match extract_geom (gx, gy, lon, lat), so
+    reader. EMPTY (a NaN NaN point, a zero-ring polygon) has no
+    vertices. Output columns match extract_geom (gx, gy, lon, lat), so
     pip_join runs unchanged."""
     import struct
 
@@ -136,20 +116,37 @@ def extract_geom_wkb(docs: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
     def xy(v):
         if v is None:
             return np.empty(0), np.empty(0)
-        v = bytes(v)
         if len(v) == 21 and v[:5] == b"\x01\x01\x00\x00\x00":
             x, y = struct.unpack_from("<2d", v, 5)
-            return np.array([x]), np.array([y])
+            if x == x or y == y:  # NaN NaN is POINT EMPTY
+                return np.array([x]), np.array([y])
         g = GM.parse_wkb(v)
         if g.kind == "polygon" and len(g.parts[0]) > 1:
             raise ValueError("POLYGON with interior rings is unsupported")
         return g.all_points()
 
-    @F.pandas_udf(_GEOM)
-    def parse(bs: pd.Series) -> pd.DataFrame:
-        return _geom_frame([xy(v) for v in bs.to_numpy()])
+    @F.arrow_udf(_GEOM)
+    def parse(bs: pa.Array) -> pa.Array:
+        geoms = [xy(v) for v in bs.to_pylist()]
+        return _geom_struct(*G.csr_from_lists([g[0] for g in geoms], [g[1] for g in geoms]))
 
     return _with_geom(docs, parse(F.col(wkb_col)))
+
+
+def _csr_from_wkt(wkt: pa.Array):
+    """Input adapter for raw docs: parse the WKT column."""
+    off, xs, ys = G.parse_wkt_arrow(wkt)
+    return (*G.rep_points(off, xs, ys), off, xs, ys)
+
+
+def _csr_from_lists(lon: pa.Array, lat: pa.Array, gx: pa.Array, gy: pa.Array):
+    """Input adapter for extract_geom(_wkb) output: its rep points, and
+    the gx/gy ListArrays' offsets and values read as the CSR without a
+    copy (a NULL list has no vertices)."""
+    if gx.null_count or gy.null_count:
+        gx, gy = (pc.fill_null(a, pa.scalar([], a.type)) for a in (gx, gy))
+    off = gx.offsets.to_numpy().astype(np.int64)
+    return _f64(lon), _f64(lat), off, _f64(gx.values), _f64(gy.values)
 
 
 _MATCH_FIELDS = [
@@ -166,35 +163,31 @@ _OUT = {
 }
 
 
-def _make_pip_udf(bc, level: int, mode: str, polys_of):
+def _make_pip_udf(bc, level: int, mode: str, csr_of):
     """The one PIP UDF: rep point -> cell -> staged match against the
-    broadcast PackedCover. `polys_of(lon, lat, *geom)` is the input
-    adapter that turns the geometry columns into the sparse polygon
-    dict (filling polygon rep points in place). Arrow traffic on the
-    raw-docs path: two doubles + a rarely-non-null string in, one small
-    struct out — candidate data never rides on document rows."""
+    broadcast PackedCover. `csr_of(*cols)` is the input adapter that
+    turns the geometry columns into (px, py, off, xs, ys): rep points
+    plus CSR vertex arrays. Arrow traffic on the raw-docs path: the WKT
+    string in, one small struct out — candidate data never rides on
+    document rows."""
 
-    @F.pandas_udf(_OUT[mode])
-    def pip(plon: pd.Series, plat: pd.Series, *geom: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(_OUT[mode])
+    def pip(*cols: pa.Array) -> pa.Array:
         cov = bc.value
-        lon = plon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat = plat.to_numpy(dtype=np.float64, na_value=np.nan)
-        polys = polys_of(lon, lat, *geom)
-        cell = np_geo_cell(np.nan_to_num(lon, nan=-999.0),
-                           np.nan_to_num(lat, nan=-999.0), level)
-        cell[np.isnan(lon)] = -1
-        out = pd.DataFrame({"lon": lon, "lat": lat})
+        px, py, *geom = csr_of(*cols)
+        cell = np_geo_cell(np.nan_to_num(px, nan=-999.0),
+                           np.nan_to_num(py, nan=-999.0), level)
+        cell[np.isnan(px)] = -1
+        out = [_nan_null(px), _nan_null(py)]
         if mode == "first":
-            zone, eas = IX.first_match_packed(cov, cell, lon, lat, polys)
+            zone, eas = IX.first_match_packed(cov, cell, px, py, geom)
             miss = zone < 0  # the -1 sentinel becomes NULL
-            out["zone_id"] = pd.arrays.IntegerArray(zone, miss)
-            out["eas_id"] = pd.arrays.IntegerArray(eas, miss)
+            out += [pa.array(zone, mask=miss), pa.array(eas, mask=miss)]
         else:
-            matches = IX.all_matches_packed(cov, cell, lon, lat, polys)
-            out["matches"] = [
-                [{"zone_id": z, "eas_id": e} for z, e in m] for m in matches
-            ]
-        return out
+            off, zone, eas = IX.all_matches_packed(cov, cell, px, py, geom)
+            m = pa.StructArray.from_arrays([zone, eas], names=["zone_id", "eas_id"])
+            out.append(pa.ListArray.from_arrays(pa.array(off, pa.int32()), m))
+        return pa.StructArray.from_arrays(out, names=_OUT[mode].fieldNames())
 
     return pip
 
@@ -210,38 +203,24 @@ def pip_join(docs: DataFrame, zindex: IX.ZoneIndex, mode: str = "first") -> Data
     mode 'all': one row per intersecting pair, NULL row when none —
       overlay-join semantics (generic/ogrlayer.cpp:2062).
 
-    Either input shape runs the same vectorized pandas UDF; only its
-    input adapter differs. The output gains the rep point (lon, lat)
+    Either input shape runs the same Arrow UDF; only its input adapter
+    differs. The output gains the rep point (lon, lat)
     and the match (zone_id, eas_id).
     """
     if mode not in _OUT:
         raise ValueError(f"mode must be 'first' or 'all', got {mode}")
 
     if "gx" in docs.columns:  # pre-extracted geometry: no re-parse
-        src, args, polys_of = docs, ("lon", "lat", "gx", "gy"), _polys_from_lists
+        src, args, csr_of = docs, ("lon", "lat", "gx", "gy"), _csr_from_lists
     else:
         src = docs if "geom_wkt" in docs.columns else docs.withColumn(
             "geom_wkt", geom_wkt_col()
         )
-        # point coords extracted JVM-side (whole-stage codegen regexp +
-        # cast); only non-point rows ship their WKT through Arrow
-        src = (
-            src.withColumn(
-                "_plon", F.regexp_extract("geom_wkt", _POINT_RE, 1).cast("double")
-            )
-            .withColumn(
-                "_plat", F.regexp_extract("geom_wkt", _POINT_RE, 2).cast("double")
-            )
-            .withColumn(
-                "_pwkt", F.when(F.col("_plon").isNull(), F.col("geom_wkt"))
-            )
-        )
-        args, polys_of = ("_plon", "_plat", "_pwkt"), _fill_poly_rows
+        args, csr_of = ("geom_wkt",), _csr_from_wkt
 
-    udf = _make_pip_udf(zindex.bc, zindex.level, mode, polys_of)
+    udf = _make_pip_udf(zindex.bc, zindex.level, mode, csr_of)
     j = (
         src.withColumn("_m", udf(*map(F.col, args)))
-        .drop("_plon", "_plat", "_pwkt")
         .withColumn("lon", F.col("_m.lon"))
         .withColumn("lat", F.col("_m.lat"))
     )

@@ -63,8 +63,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 40k rows/batch measured ~15% faster than the 10k default for
-        # the fused PIP UDF at 32 cores (fewer batch setups, same numpy
-        # work); candidate expansion stays < a few hundred k pairs/batch
+        # the fused PIP UDF at 32 cores; at 4 cores the two measure the
+        # same within noise. Candidate expansion stays < a few hundred k
+        # pairs/batch
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "40000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")

@@ -7,6 +7,7 @@ NULL zone columns when nothing intersects.
 """
 
 import functools
+import struct
 
 import numpy as np
 import pandas as pd
@@ -27,33 +28,32 @@ HOLED = "POLYGON((0 0,10 0,10 10,0 10,0 0),(2 2,3 2,3 3,2 2))"
 
 
 def _docs(spark, shape):
-    """The synth docs (5% polygons) in one of the three input shapes
-    pip_join accepts: raw nested spans, extract_geom output, and WKB
-    through extract_geom_wkb. The WKT shapes also carry EMPTY docs;
-    the WKT -> WKB encoder has no EMPTY form, so the WKB shape does not."""
+    """The synth docs (5% polygons) plus the EMPTY docs, in one of the
+    three input shapes pip_join accepts: raw nested spans, extract_geom
+    output, and WKB (EMPTY as a NaN NaN point and a zero-ring polygon)
+    through extract_geom_wkb."""
     docs = synth.documents_df(spark, N_DOCS)
-    if shape == "wkb":
-        wkb = docs.select("doc_id", "spans", SG.st_aswkb(geom_wkt_col()).alias("geom_wkb"))
-        return extract_geom_wkb(wkb)
     extra = spark.createDataFrame(
         [(k, [("geom", w, "", 0)]) for k, w in EMPTY_DOCS.items()], docs.schema
     )
     docs = docs.unionByName(extra)
+    if shape == "wkb":
+        wkb = docs.select("doc_id", "spans", SG.st_aswkb(geom_wkt_col()).alias("geom_wkb"))
+        return extract_geom_wkb(wkb)
     return docs if shape == "docs" else extract_geom(docs)
 
 
 @functools.lru_cache(maxsize=None)
-def _expected(mode, with_empty):
+def _expected(mode):
     docs = synth.documents_np(N_DOCS)[["doc_id", "geom_wkt"]]
-    if with_empty:
-        extra = pd.DataFrame({"doc_id": list(EMPTY_DOCS), "geom_wkt": list(EMPTY_DOCS.values())})
-        docs = pd.concat([docs, extra], ignore_index=True)
+    extra = pd.DataFrame({"doc_id": list(EMPTY_DOCS), "geom_wkt": list(EMPTY_DOCS.values())})
+    docs = pd.concat([docs, extra], ignore_index=True)
     return pip_oracle(docs, synth.zones_np(N_ZONES), mode)
 
 
 def _result(spark, mode, shape="docs"):
     out = pip_join_full(spark, _docs(spark, shape), synth.zones_np(N_ZONES), mode=mode)
-    return out.select("doc_id", "zone_id", "eas_id", "spans").toPandas()
+    return out.select("doc_id", "zone_id", "eas_id", "lon", "lat", "spans").toPandas()
 
 
 def _ids(df):
@@ -67,7 +67,7 @@ def _ids(df):
 
 def _check_golden(spark, mode, shape):
     got = _result(spark, mode, shape)
-    exp = _expected(mode, shape != "wkb")
+    exp = _expected(mode)
     pd.testing.assert_frame_equal(_ids(got), _ids(exp))
     # some docs match and some don't (NULL leg is exercised)
     assert got["zone_id"].notna().sum() > 0.5 * N_DOCS
@@ -87,8 +87,25 @@ def test_pip_join_all_mode_golden(spark):
 @pytest.mark.parametrize("mode", ["first", "all"])
 @pytest.mark.parametrize("shape", ["extract_geom", "wkb"])
 def test_pip_join_prepared_golden(spark, shape, mode):
-    """The same goldens over pre-extracted geometry (gx/gy/lon/lat)."""
-    _check_golden(spark, mode, shape)
+    """The same goldens over pre-extracted geometry (gx/gy/lon/lat);
+    an EMPTY doc has no vertices and a NULL rep point in every shape."""
+    got = _check_golden(spark, mode, shape)
+    empty = got[got.doc_id.isin(list(EMPTY_DOCS))]
+    assert len(empty) == len(EMPTY_DOCS)
+    assert empty[["zone_id", "lon", "lat"]].isna().all().all()
+
+
+def test_wkb_empty():
+    """EMPTY to WKB is the standard form (POINT: NaN NaN; POLYGON: zero
+    rings), and reads back with no vertices."""
+    from gdal_spark import geometry as GM
+
+    nan2 = struct.pack("<2d", np.nan, np.nan)
+    want = {"POINT EMPTY": b"\x01\x01\x00\x00\x00" + nan2,
+            "POLYGON EMPTY": b"\x01\x03\x00\x00\x00\x00\x00\x00\x00"}
+    for wkt, wkb in want.items():
+        assert GM.to_wkb(GM.parse_wkt(wkt)) == wkb
+        assert [len(a) for a in GM.parse_wkb(wkb).all_points()] == [0, 0]
 
 
 def test_wkt_parsers_empty_and_holes():

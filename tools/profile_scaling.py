@@ -1,7 +1,7 @@
 """Per-stage 8->32-core scaling profile of the headline PIP+tile job —
 separates where the 8->32 efficiency goes: parquet scan (JVM I/O),
-JVM point parsing (codegen regexp), the fused Arrow PIP UDF, and the
-tile-assignment column math. Fresh JVM per (level, stage); 1 warm-up,
+WKT parsing (geom span select + the Arrow parser, via extract_geom),
+the fused Arrow PIP UDF, and the tile-assignment column math. Fresh JVM per (level, stage); 1 warm-up,
 best of 2. Usage: python tools/profile_scaling.py [n_docs]
 """
 
@@ -20,7 +20,7 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from gdal_spark import synth, tiling
 from gdal_spark.index import zone_index
-from gdal_spark.joins import pip_join, geom_wkt_col, _POINT_RE
+from gdal_spark.joins import extract_geom, pip_join
 from gdal_spark.session import get_spark
 
 cpus = int(sys.argv[1]); stage = sys.argv[2]; which = sys.argv[3]
@@ -34,10 +34,8 @@ def scan():
     return docs.select(F.count("*"), F.sum(F.size("spans"))).collect()
 
 def parse():
-    d = docs.withColumn("geom_wkt", geom_wkt_col())
-    d = d.withColumn("_plon", F.regexp_extract("geom_wkt", _POINT_RE, 1).cast("double"))
-    d = d.withColumn("_plat", F.regexp_extract("geom_wkt", _POINT_RE, 2).cast("double"))
-    return d.select(F.count("*"), F.sum("_plon"), F.sum("_plat")).collect()
+    d = extract_geom(docs)
+    return d.select(F.count("*"), F.sum("lon"), F.sum("lat")).collect()
 
 def pip():
     j = pip_join(docs, zidx, "first")
